@@ -105,9 +105,12 @@ def context() -> dict:
 
 
 def steal_share(before: dict, after: dict) -> float:
+    """Share of the host's busy CPU time (user, nice, system, irq, softirq,
+    steal) that the hypervisor gave to other guests between two calls: the
+    share of its run time that any thread of the program lost."""
     d = [b - a for a, b in zip(before["cpu"], after["cpu"])]
-    total = sum(d[:8])
-    return d[7] / total if total > 0 else 0.0
+    busy = sum(d[:8]) - d[3] - d[4]  # not idle or iowait
+    return d[7] / busy if busy > 0 else 0.0
 
 
 def stop_descendants(timeout: float = 20.0) -> None:

@@ -5,7 +5,7 @@ argument and returns ``(tables, props)``: ``tables`` maps a table name to a
 ``pyarrow.Table`` that is written once as parquet during set-up, and
 ``props`` records each input property the engine's behaviour depends on
 (row counts, vocabulary size and skew, repeated-multiset share, planted
-near-duplicate share, eval overlap, value spread, vectors per IVF cell).
+near-duplicate share, eval overlap, vectors per IVF cell).
 The same seed always yields the same tables; any seed yields a valid
 workload on which no operation fails.
 """
@@ -19,13 +19,15 @@ import pyarrow as pa
 
 LETTERS = np.array(list("abcdefghijklmnopqrstuvwxyz"))
 
-# Input sizes. At these sizes a run's time is mostly Spark's per-job and
-# per-call overhead (measured on 4 cores: curate takes about as long on 600
-# as on 4,000 documents), so larger inputs would lengthen every run without
-# changing which layers dominate. One linking batch per run keeps kg_build's
-# cold and warm run inside the benchmark's time budget; the BM25 index built
-# in the cold run is reused by every warm run.
-KG_FILES = 8_000
+# Input sizes. Measured on 4 cores in one warm JVM, a warm kg_build run
+# takes about 4.5 s plus 0.16 ms per corpus file and a warm curate run about
+# 16 s plus 2.2 ms per document: the rest is Spark's per-job overhead. At
+# 32,000 files and 3,000 documents the input-proportional part is about
+# half of a kg_build run and a third of a curate run; larger inputs would
+# push one invocation (set-up, cold run, warm run) well past a minute. One
+# linking batch per run: the BM25 index built in the cold run is reused by
+# every warm run.
+KG_FILES = 32_000
 KG_MODULES = 3_000
 KG_BASES = 500
 KG_ZIPF = 1.2
@@ -42,17 +44,13 @@ LINK_DIM = 64
 LINK_CLUSTERS = 16
 IVF_CELLS = 16  # similarity.N_CELLS: the pinned coarse quantizer size
 
-CUR_DOCS = 1_500
+CUR_DOCS = 3_000
 CUR_VOCAB = 2_000
 CUR_DUP_SHARE = 0.2
 CUR_EVAL_OVERLAP = 0.05
 CUR_LOW_QUALITY = 0.05
 CUR_REPETITIVE = 0.03
 CUR_EVAL_EVERY = 20  # the curate CLI job's hold-out rule: doc_id % 20 == 0
-
-PROF_ROWS = 60_000
-PROF_SKEW_OUTLIERS = 0.001
-PROF_BUCKETS = 1024  # profile_quantiles' range-bucket count
 
 LEXICONS = {
     "en": ("the", "a", "of", "and", "to"),
@@ -302,42 +300,6 @@ def curate(rng: np.random.Generator) -> tuple[dict, dict]:
     return {"documents": table}, props
 
 
-# ------------------------------------------------------------------- profile
-
-def profile(rng: np.random.Generator) -> tuple[dict, dict]:
-    """Numeric table for profile_table/profile_quantiles. Column `skewed`
-    puts all but a 0.1% tail of its values into the first of the 1024
-    min/max range buckets profile_quantiles sorts by (one-bucket skew)."""
-    n = PROF_ROWS
-    skewed = rng.random(n)
-    out = rng.random(n) < PROF_SKEW_OUTLIERS
-    skewed[out] = rng.uniform(1e6, 1e7, size=int(out.sum()))
-    width = (skewed.max() - skewed.min()) / PROF_BUCKETS
-    price = np.round(rng.lognormal(3.0, 1.0, size=n), 2)
-    qty = rng.integers(1, 51, size=n).astype(np.int32)
-    qty_null = rng.random(n) < 0.01
-    base_ts = np.datetime64("2020-01-01T00:00:00", "us")
-    ts = base_ts + rng.integers(0, 3 * 365 * 86400, size=n).astype("timedelta64[s]")
-    table = pa.table({
-        "id": rng.permutation(n).astype(np.int64),
-        "qty": pa.array(qty, mask=qty_null),
-        "price": price,
-        "discount": np.round(rng.integers(0, 11, size=n) / 100.0, 2),
-        "skewed": skewed,
-        "flag": rng.choice(np.array(["A", "N", "R"]), size=n).tolist(),
-        "tag": [f"t{v}" for v in _zipf_ranks(rng, 200, 1.1, n)],
-        "ts": pa.array(ts.astype("datetime64[us]")),
-    })
-    props = {
-        "num_cols": 5,
-        "skewed_outlier_share": round(float(out.mean()), 5),
-        "skewed_bucket0_share": round(float(np.mean(skewed - skewed.min() < width)), 5),
-        "qty_null_share": round(float(qty_null.mean()), 5),
-        "price_distinct": int(np.unique(price).size),
-    }
-    return {"tbl": table}, props
-
-
 def kg_build(rng: np.random.Generator) -> tuple[dict, dict]:
     """The code corpus, then the linking dictionary, candidates and query
     batches, drawn in that order from one generator."""
@@ -346,4 +308,4 @@ def kg_build(rng: np.random.Generator) -> tuple[dict, dict]:
     return {**tables, **link_tables}, {**props, **link_props}
 
 
-GENERATORS = {"kg_build": kg_build, "link": link, "curate": curate, "profile": profile}
+GENERATORS = {"kg_build": kg_build, "curate": curate}

@@ -2,26 +2,28 @@
 
     python3 perfbench/run.py --workload kg_build --seed 1 --seconds 5 --trace 0
 
-Workloads (BENCHMARK.json says why each exists): kg_build and curate, plus
-link and profile, which run by name but are not in BENCHMARK.json (see
-workloads.py). One process is one closed-loop client: it starts one
-SparkSession on local[<cores>], generates the workload's inputs from
---seed, computes the expected output digests with DuckDB, then runs the
-workload one job at a time and checks every run's output. The first run
-is cold; warm runs follow until --seconds have passed and at least the
-workload's min_warm warm runs are done.
+Workloads (BENCHMARK.json says why each exists): kg_build and curate. One
+process is one closed-loop client: it starts one SparkSession on
+local[<cores>], generates the workload's inputs from --seed, computes the
+expected output digests with DuckDB, then runs the workload one job at a
+time and checks every run's output. The first run is cold; warm runs
+follow until --seconds have passed, at least one.
 
 --trace 0 reports the end-to-end metrics:
-  setup_s       median of 3 set-ups (session start, input generation and
-                oracle digests), each after stopping the previous session
+  setup_s       the set-up: JVM launch and session start, input generation
+                and oracle digests, as a one-shot spark-submit pays it
   wall_s        median wall time of the warm runs
   rows_per_s    workload input rows / wall_s
   cpu_s         median CPU seconds of a warm run: driver, JVM (without its
                 JIT compiler threads) and Python workers (/proc)
   peak_rss_mb   sum of the peak resident sets of the JVM and Python workers
-and prints first_call_s, the cold first run (codegen, JIT, index builds,
-first persists: what one spark-submit pays), which is one sample per
-process and so has no bound.
+setup_s and each warm run's wall time are scaled by 1 - the steal share of
+their interval (the share of the host's busy CPU time the hypervisor gave
+to other guests): on a shared virtual host, steal bursts stretch a run by
+up to a third and are not the program's doing. Raw times and steal shares
+are printed. It also prints first_call_s, the cold first run (codegen,
+JIT, index builds, first persists: what one spark-submit pays), which is
+one sample per process and so has no bound.
 --trace 1 traces the first run and every other warm run, and reports
 first_call_s, the per-layer metrics (<layer>.<metric>) plus the tracing
 overhead (median over the traced warm runs of their wall time minus the
@@ -51,7 +53,6 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 WORK = ROOT / ".perfbench_work"
-SETUPS = 3
 DRIVER_MEM = "2g"
 
 
@@ -89,7 +90,8 @@ def _start_spark(cores: int):
     from deepkg_spark import session
 
     # get_spark puts shuffle files on /dev/shm when it exists; the
-    # benchmark keeps them inside the checkout (SPARK_LOCAL_DIRS) instead
+    # benchmark writes nothing outside its checkout, so they go to
+    # SPARK_LOCAL_DIRS under WORK instead
     session._LOCAL_DIR = None
     return session.get_spark(app_name="perfbench", master=f"local[{cores}]",
                              shuffle_partitions=cores)
@@ -223,7 +225,7 @@ def main() -> int:
         import duckdb
 
         import deepkg_spark.session  # noqa: F401
-        from perfbench import trace, workloads
+        from perfbench import host, trace, workloads
     except ImportError as e:
         print(f"perfbench: the program under test is not importable: {e}", file=sys.stderr)
         return 2
@@ -238,28 +240,27 @@ def main() -> int:
     con = duckdb.connect()
     spark = None
     try:
-        setups = []
-        for _ in range(SETUPS):
-            t0 = time.perf_counter()
-            if spark is not None:
-                spark.stop()
-            spark = _start_spark(cores)
-            wl.setup(args.seed, con)
-            setups.append(time.perf_counter() - t0)
+        # one set-up per process: a second one would either reuse the
+        # running JVM, which hides the launch, or launch another, which adds
+        # 6-10 s (4 cores) to an invocation that must stay near a minute
+        ctx0, t0 = host.context(), time.perf_counter()
+        spark = _start_spark(cores)
+        wl.setup(args.seed, con)
+        setup_raw = time.perf_counter() - t0
+        setup_steal = host.steal_share(ctx0, host.context())
         wl.prepare(spark)
         tr = trace.Tracer(spark, args.workload) if args.trace else trace.NullTracer()
         untraced_tr = trace.NullTracer()
 
         samples = [_one_run(wl, spark, con, tr, 0)]
         # closed loop: one run at a time while the window lasts, with at
-        # least the workload's min_warm warm runs. A traced invocation
-        # traces every other warm run and ends on an untraced one (at least
-        # three warm runs), so each traced run has an untraced run on
-        # either side
+        # least one warm run. A traced invocation traces every other warm
+        # run and ends on an untraced one (at least three warm runs), so
+        # each traced run has an untraced run on either side
         deadline = time.perf_counter() + args.seconds
         while True:
             n = len(samples)
-            enough = (n >= 4 and n % 2 == 0) if args.trace else n - 1 >= wl.min_warm
+            enough = (n >= 4 and n % 2 == 0) if args.trace else n >= 2
             if enough and time.perf_counter() >= deadline:
                 break
             use = tr if args.trace and len(samples) % 2 == 0 else untraced_tr
@@ -282,10 +283,10 @@ def main() -> int:
                 if s["error"]:
                     print(s["error"], file=sys.stderr)
             return 1
-        wall = [s["wall_s"] for s in warm_plain]
+        wall = [s["wall_s"] * (1.0 - s["steal_share"]) for s in warm_plain]
         cpu = [s["cpu_s"] for s in warm_plain]
         metrics = {
-            "setup_s": (_median(setups), "s", len(setups)),
+            "setup_s": (setup_raw * (1.0 - setup_steal), "s", 1),
             "wall_s": (_median(wall), "s", len(wall)),
             "rows_per_s": (wl.rows / _median(wall), "rows/s", len(wall)),
             "cpu_s": (_median(cpu), "s", len(cpu)),
@@ -295,13 +296,15 @@ def main() -> int:
     WORK.mkdir(parents=True, exist_ok=True)
     record = {
         "workload": args.workload, "seed": args.seed, "trace": args.trace, "cores": cores,
-        "input_props": wl.props, "setups_s": setups, "samples": samples,
+        "input_props": wl.props, "setup_s": setup_raw, "setup_steal_share": setup_steal,
+        "samples": samples,
         "spans": getattr(tr, "spans", []),
     }
     (WORK / f"{args.workload}-seed{args.seed}-trace{args.trace}.json").write_text(
         json.dumps(record, indent=1, default=str))
 
     print(f"workload {args.workload} seed {args.seed} cores {cores} input {json.dumps(wl.props)}")
+    print(f"setup wall {setup_raw:8.3f} s steal {setup_steal:.3f}")
     for s in samples:
         print(f"run {s['run']:3d} {'traced' if s['traced'] else 'plain ':6s} "
               f"wall {s['wall_s']:8.3f} s cpu {s['cpu_s']:8.3f} s ok {s['ok']!s:5s} "

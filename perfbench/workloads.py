@@ -1,12 +1,8 @@
 """The workloads: set-up (inputs + expected digests), one run, and the
 output check of a run.
 
-BENCHMARK.json lists two: ``kg_build`` (the graph job, canonicalization
-and candidate-recall batches) and ``curate``. Each process pays a cold
-first run of 20-35 s before its warm runs (4 cores), and two sets of ten
-seeds per listed workload must fit in under an hour, so ``link`` and
-``profile`` are not listed: link's calls run inside ``kg_build``, and ``profile`` (the
-profile job over a one-bucket-skewed column) runs only when named.
+Two workloads, both listed in BENCHMARK.json: ``kg_build`` (the graph job,
+canonicalization and candidate-recall batches) and ``curate``.
 
 Each run calls the engine's public functions the way the matching CLI job
 does and writes its outputs as parquet, so ``exec`` phases are real writes.
@@ -93,9 +89,6 @@ def _patched(module, name: str, wrap):
 
 class Workload:
     name = ""
-    # warm runs measured even when they outlast --seconds: a fixed count
-    # keeps every invocation at the same point of the JVM's warm-up
-    min_warm = 1
 
     def __init__(self, work: Path):
         self.work = work
@@ -134,15 +127,33 @@ class Workload:
         return {}
 
 
-class Link(Workload):
-    """Candidate recall in query batches against one dictionary and one
+class KgBuild(Workload):
+    """The KG-construction chain: the graph job (triples, persisted ->
+    node/edge tables written partitioned), mentions -> canonical entities,
+    then candidate recall in query batches against one dictionary and one
     candidate set: bm25_topn, dense_topk_udf and ivf_pq_topk per batch. The
     same dictionary DataFrame is passed every time, so the first batch of
     the first run builds the BM25 index and every later call reuses it."""
 
-    name = "link"
+    name = "kg_build"
 
     def oracle(self, con) -> dict:
+        from deepkg_spark.operators.canonicalize import canonical_entities_duck_sql
+        from deepkg_spark.operators.graph import edge_table_duck_sql, node_table_duck_sql
+        from deepkg_spark.operators.mentions import mentions_duck_sql
+        from deepkg_spark.operators.relations import triples_duck_sql
+
+        # tables, not views: the node and edge oracles both read the triples
+        con.execute(f"CREATE OR REPLACE TEMP TABLE triples AS {triples_duck_sql('corpus')}")
+        con.execute(f"CREATE OR REPLACE TEMP TABLE mentions AS {mentions_duck_sql('corpus')}")
+        return {
+            ("nodes", "hive"): digest(con, node_table_duck_sql("triples")),
+            ("edges", "hive"): digest(con, edge_table_duck_sql("triples")),
+            ("canonical", "flat"): digest(con, canonical_entities_duck_sql("mentions")),
+            **self._link_oracle(con),
+        }
+
+    def _link_oracle(self, con) -> dict:
         from deepkg_spark.operators.linking import bm25_duck_sql, dense_topk_duck_sql
         from deepkg_spark.operators.similarity import ivf_pq_topk_duck_sql
 
@@ -160,53 +171,6 @@ class Link(Workload):
     def prepare(self, spark) -> None:
         self.dictionary = spark.read.parquet(str(self.paths["dictionary"]))
         self.candidates = spark.read.parquet(str(self.paths["candidates"]))
-
-    def run(self, spark, tr, out: Path) -> dict:
-        from deepkg_spark.operators.linking import bm25_topn, dense_topk_udf
-        from deepkg_spark.operators.similarity import ivf_pq_topk
-
-        batch_s = []
-        for b in range(self.props["batches"]):
-            q = spark.read.parquet(str(self.paths[f"queries_{b}"]))
-            vq = spark.read.parquet(str(self.paths[f"vqueries_{b}"]))
-            t0 = time.perf_counter()
-            with tr.span("linking", "build", "bm25_topn"):
-                ranked = bm25_topn(q, self.dictionary, topn=TOPN)
-            with tr.span("linking", "exec", "bm25_topn.write"):
-                ranked.write.mode("overwrite").parquet(str(out / "bm25" / f"b{b}"))
-            with tr.span("linking", "build", "dense_topk_udf"):
-                dense = dense_topk_udf(vq, self.candidates, k=TOPK)
-            with tr.span("linking", "exec", "dense_topk_udf.write"):
-                dense.write.mode("overwrite").parquet(str(out / "dense" / f"b{b}"))
-            batch_s.append(time.perf_counter() - t0)
-            with tr.span("similarity", "build", "ivf_pq_topk"):
-                ann = ivf_pq_topk(vq, self.candidates, k=TOPK, dim=self.props["dim"])
-            with tr.span("similarity", "exec", "ivf_pq_topk.write"):
-                ann.write.mode("overwrite").parquet(str(out / "ivf_pq" / f"b{b}"))
-        return {"linking_batch_s": batch_s}
-
-
-class KgBuild(Link):
-    """The KG-construction chain: the graph job (triples, persisted ->
-    node/edge tables written partitioned), mentions -> canonical entities,
-    then the linking batches of ``Link`` against a dictionary."""
-
-    name = "kg_build"
-
-    def oracle(self, con) -> dict:
-        from deepkg_spark.operators.canonicalize import canonical_entities_duck_sql
-        from deepkg_spark.operators.graph import edge_table_duck_sql, node_table_duck_sql
-        from deepkg_spark.operators.mentions import mentions_duck_sql
-        from deepkg_spark.operators.relations import triples_duck_sql
-
-        con.execute(f"CREATE OR REPLACE VIEW triples AS {triples_duck_sql('corpus')}")
-        con.execute(f"CREATE OR REPLACE VIEW mentions AS {mentions_duck_sql('corpus')}")
-        return {
-            ("nodes", "hive"): digest(con, node_table_duck_sql("triples")),
-            ("edges", "hive"): digest(con, edge_table_duck_sql("triples")),
-            ("canonical", "flat"): digest(con, canonical_entities_duck_sql("mentions")),
-            **super().oracle(con),
-        }
 
     def run(self, spark, tr, out: Path) -> dict:
         from deepkg_spark.operators.canonicalize import canonical_entities
@@ -232,7 +196,31 @@ class KgBuild(Link):
             c = canonical_entities(m)
         with tr.span("canonicalize", "exec", "canonical_entities.write"):
             c.write.mode("overwrite").parquet(str(out / "canonical"))
-        return super().run(spark, tr, out)
+        return self._link_run(spark, tr, out)
+
+    def _link_run(self, spark, tr, out: Path) -> dict:
+        from deepkg_spark.operators.linking import bm25_topn, dense_topk_udf
+        from deepkg_spark.operators.similarity import ivf_pq_topk
+
+        batch_s = []
+        for b in range(self.props["batches"]):
+            q = spark.read.parquet(str(self.paths[f"queries_{b}"]))
+            vq = spark.read.parquet(str(self.paths[f"vqueries_{b}"]))
+            t0 = time.perf_counter()
+            with tr.span("linking", "build", "bm25_topn"):
+                ranked = bm25_topn(q, self.dictionary, topn=TOPN)
+            with tr.span("linking", "exec", "bm25_topn.write"):
+                ranked.write.mode("overwrite").parquet(str(out / "bm25" / f"b{b}"))
+            with tr.span("linking", "build", "dense_topk_udf"):
+                dense = dense_topk_udf(vq, self.candidates, k=TOPK)
+            with tr.span("linking", "exec", "dense_topk_udf.write"):
+                dense.write.mode("overwrite").parquet(str(out / "dense" / f"b{b}"))
+            batch_s.append(time.perf_counter() - t0)
+            with tr.span("similarity", "build", "ivf_pq_topk"):
+                ann = ivf_pq_topk(vq, self.candidates, k=TOPK, dim=self.props["dim"])
+            with tr.span("similarity", "exec", "ivf_pq_topk.write"):
+                ann.write.mode("overwrite").parquet(str(out / "ivf_pq" / f"b{b}"))
+        return {"linking_batch_s": batch_s}
 
 
 CURATE_STAGES = ("gate", "dedup", "decontaminate", "sample", "pack")
@@ -248,9 +236,6 @@ class Curate(Workload):
     checksums and the digest of the packed output."""
 
     name = "curate"
-    # one warm run of this job spreads about 18% (IQR/median) across seeds
-    # on a 4-core shared host, the mean of two about 7%
-    min_warm = 2
 
     def run(self, spark, tr, out: Path) -> dict:
         from pyspark.sql import functions as F
@@ -354,46 +339,7 @@ class Curate(Workload):
         return extras
 
 
-PROFILE_NUM = ("id", "qty", "price", "discount", "skewed")
-PROFILE_STR = ("flag", "tag")
-PROFILE_TS = ("ts",)
-
-
-class Profile(Workload):
-    """profile job: profile_table over every column and profile_quantiles
-    over the numeric ones, both written as parquet."""
-
-    name = "profile"
-
-    def oracle(self, con) -> dict:
-        from deepkg_spark.operators.curation import (
-            profile_quantiles_duck_sql,
-            profile_table_duck_sql,
-        )
-
-        return {
-            ("profile", "flat"): digest(con, profile_table_duck_sql(
-                "tbl", num_cols=PROFILE_NUM, str_cols=PROFILE_STR, ts_cols=PROFILE_TS)),
-            ("quantiles", "flat"): digest(con, profile_quantiles_duck_sql("tbl", PROFILE_NUM)),
-        }
-
-    def run(self, spark, tr, out: Path) -> dict:
-        from deepkg_spark.operators.curation import profile_quantiles, profile_table
-
-        df = spark.read.parquet(str(self.paths["tbl"]))
-        with tr.span("curation", "build", "profile_table"):
-            prof = profile_table(df, num_cols=PROFILE_NUM, str_cols=PROFILE_STR,
-                                 ts_cols=PROFILE_TS)
-        with tr.span("curation", "exec", "profile_table.write"):
-            prof.write.mode("overwrite").parquet(str(out / "profile"))
-        with tr.span("curation", "build", "profile_quantiles"):
-            q = profile_quantiles(df, num_cols=PROFILE_NUM)
-        with tr.span("curation", "exec", "profile_quantiles.write"):
-            q.write.mode("overwrite").parquet(str(out / "quantiles"))
-        return {}
-
-
-WORKLOADS = {w.name: w for w in (KgBuild, Curate, Link, Profile)}
+WORKLOADS = {w.name: w for w in (KgBuild, Curate)}
 
 
 def remove(path: Path) -> None:
