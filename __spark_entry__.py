@@ -57,7 +57,6 @@ from deepkg_spark.operators.multimodal import (
 from deepkg_spark.operators.dedup import (
     dedup_exact,
     dedup_exact_duck_sql,
-    embedding_neardup,
     embedding_neardup_duck_sql,
     embedding_neardup_lsh,
     plant_neardups,
@@ -84,7 +83,6 @@ from deepkg_spark.operators.head_factored import (
     head_spans_factored,
 )
 from deepkg_spark.operators.mentions import (
-    head_spans_udf,
     mentions_duck_sql,
     mentions_frame,
     mentions_udf,
@@ -702,7 +700,7 @@ def _q_candidates(spark, sf_dir):
 def _q_phrase_features(spark, sf_dir):
     """The full AutoPhrase feature table (freq/doc_freq/pmi/idf/entropies) —
     the distributed half of the quality loop, exact-oracle checked (the
-    driver-side classifier itself stays rows-only in ph_quality_loop)."""
+    classifier on top is checked by ph_quality_loop)."""
     return phrase_features(_docs(spark, sf_dir), max_n=3, min_freq=3)
 
 
@@ -1131,7 +1129,8 @@ def _q_sel_roundtrip(spark, sf_dir):
 def _q_distant(spark, sf_dir):
     """Distant supervision over documents with a corpus-mined dictionary
     (top bigrams = core entries, top trigrams = noisy full entries).
-    DP segmentation is not SQL-expressible -> rows-only driver check."""
+    Oracle: distant_dp_duck_sql (trie matches as window joins, the DP as
+    recursive CTEs)."""
     docs = _docs(spark, sf_dir)
     stats = ngram_stats(docs, 3).cache()
     core = _phrase_cand_for_dict(
@@ -1218,25 +1217,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order is the driver's CHECK order and the driver verifies
-    the first 50 entries only.
-
-    WINDOW ROTATION POLICY (mechanical, enforced by
-    tests/test_registry_window.py against registry_windows.json):
-    every round the 50-entry window holds, in priority order,
-      (a) oracle queries NEW this round (never officially verified),
-      (b) every query whose last official CORRECTNESS row is >= 2 rounds
-          old (the previous round's tail), including the rows-only queries,
-      (c) core per-family keepers filling the remainder.
-    Queries demoted past position 50 must all have a green official row
-    from the PREVIOUS round — so every query always has an official
-    CORRECTNESS row at most one round old. registry_windows.json records
-    each round's window; scripts/verify_contract.py still sweeps ALL
-    entries every run regardless of position."""
+    """Operator name -> (spark, sf_dir) -> DataFrame. Every entry has a
+    DuckDB oracle in ``oracle_sql()``; scripts/verify_contract.py sweeps
+    them all."""
     return {
-        # --- (a) NEW oracle evidence this round: IVF+PQ ADC search and the
-        #     four factored scorer heads (rows-only in r01-r04, now exact
-        #     DuckDB oracles via head_factored.py) ---
         "ann_ivf_pq": _q_ann_ivf_pq,
         "ann_ivf_pq_recall": _q_ann_ivf_pq_recall,
         "ann_ivf_pq_refined": _q_ann_ivf_pq_refined,
@@ -1245,7 +1229,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ner_unlabeled": _q_ner_unlabeled,
         "ner_rotary_gp": _q_ner_rotary_gp,
         "ner_efficient_gp": _q_ner_efficient_gp,
-        # --- (b) round-4 tail: last official row is r03 — fresh rows due ---
         "ner_tie_or_break": _q_tie_or_break,
         "kg_triples_offsets": _q_triples_offsets,
         "kg_offsets_closest": _q_offsets_closest,
@@ -1280,8 +1263,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sts_spearman_ties": _q_sts_spearman_ties,
         "ph_candidates": _q_candidates,
         "ph_features": _q_phrase_features,
-        # --- (c) keepers (r04-green; the remaining rows-only pair sits
-        #     here so their r5 rows stay fresh too) ---
         "ner_distant_dp": _q_distant,
         "ph_quality_loop": _q_phrase_quality,
         "kg_mentions_udf": _q_mentions_udf,
@@ -1290,9 +1271,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": _q_dedup_exact,
         "dedup_minhash_lsh": _q_minhash_lsh,
         "dedup_substring_spans": _q_substring_spans,
-        # ------------------- position 51+: past the driver's window ------
-        # every entry below has a green OFFICIAL row in CORRECTNESS_r04
-        # (at most one round old) and stays in the verify_contract sweep
         "kg_corpus": _q_corpus,
         "kg_triples_udf": _q_triples_udf,
         "kg_triples_offsets_closest": _q_triples_offsets_closest,
@@ -1473,8 +1451,8 @@ FROM (SELECT DISTINCT qid FROM exact) q LEFT JOIN hits h USING (qid)
         "ph_idf": idf_duck_sql("documents", 2),
         "ph_entropy": neighbor_entropy_duck_sql("documents", 2),
         "ph_candidates": phrase_candidates_duck_sql("documents"),
-        # the full distant-supervision loop, training included (round 5:
-        # the last formerly-rows-only query; see _q_phrase_quality)
+        # the full distant-supervision loop, training included (see
+        # _q_phrase_quality)
         "ph_quality_loop": phrase_quality_duck_sql(
             "documents",
             phrase_candidates_duck_sql(

@@ -23,9 +23,11 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from deepkg_spark.operators.curation import profile_quantiles  # noqa: E402
@@ -56,9 +58,12 @@ PROFILE_NUM = ("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
 QUIET_LOAD = 2.0  # 1-min loadavg below this at start = un-poisoned run
 
 
-def _force(df) -> int:
+Sink = Callable[[DataFrame], None]
+
+
+def force(df: DataFrame) -> None:
+    """Materialize ``df`` end-to-end through the noop sink."""
     df.write.format("noop").mode("overwrite").save()
-    return 0
 
 
 def _wait_for_quiet(max_wait_sec: float) -> float:
@@ -81,62 +86,7 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     spark = get_spark(app_name="deepkg-bench", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
-
-    # testdata ships one parquet file per table -> Spark would scan with a
-    # single partition and serialize every narrow stage. A real 100 TB corpus
-    # arrives in thousands of splits; emulate that split-parallel input here.
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(cpus)
-        .persist()
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(cpus)
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").repartition(cpus)
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
-        F.col("p_partkey").alias("term_id"), F.col("p_name").alias("name")
-    )
-    corpus = load_corpus(spark, sf_dir).repartition(cpus).persist()
-
-    q_docs = docs.select(F.col("doc_id").alias("qid"), F.col("text").alias("qtext"))
-    ann_q = emb.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    ann_c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-
-    def _kg_pipeline() -> None:
-        # persist the extraction once: edge AND node tables consume the same
-        # triple stream, and without the cache each sink re-runs the full
-        # scan+regex extraction (the single most expensive stage) — the same
-        # persist a production job uses (cli.py graph job)
-        t = triples_frame(corpus).persist()
-        try:
-            _force(edge_table(t))
-            _force(node_table(t))
-        finally:
-            t.unpersist()
-
-    queries = {
-        "kg_pipeline": _kg_pipeline,
-        "kg_sel_udf_pipeline": lambda: _force(sel_roundtrip_triples(corpus)),
-        "link_bm25": lambda: _force(bm25_topn(q_docs, part, topn=5)),
-        "ann_dense_topk": lambda: _force(dense_topk_udf(ann_q, ann_c, k=10)),
-        "dedup_minhash_lsh": lambda: _force(minhash_lsh_pairs(docs, tau=0.5)),
-        "dedup_simhash_pairs": lambda: _force(simhash_pairs(docs, max_hamming=3)),
-        "dedup_substring": lambda: _force(substring_spans(docs)),
-        "ph_pmi": lambda: _force(pmi(docs, 3)),
-        "text_fingerprints": lambda: _force(fingerprints(docs)),
-        "text_quality": lambda: _force(quality_score(docs)),
-        # round-4/5 operators (regression coverage per VERDICT r4 item 6)
-        "ann_ivf_pq": lambda: _force(ivf_pq_topk(ann_q, ann_c, k=5, dim=64)),
-        "ann_pq_codes": lambda: _force(pq_codes(emb, dim=64)),
-        "ev_asof_join": lambda: _force(asof_join(events)),
-        "profile_quantiles": lambda: _force(
-            profile_quantiles(lineitem, num_cols=PROFILE_NUM)
-        ),
-        "text_top_terms": lambda: _force(top_terms(docs, k=20)),
-    }
+    queries = headline(spark, sf_dir, cpus)
 
     # best-of-N: the sandbox host is shared and its delivered CPU varies
     # minute-to-minute (see BENCH.md); min over repeats reports the engine,
@@ -152,7 +102,7 @@ def main() -> None:
         for name, fn in queries.items():
             l0 = round(os.getloadavg()[0], 2)
             t0 = time.monotonic()
-            fn()
+            fn(force)
             dt = time.monotonic() - t0
             l1 = round(os.getloadavg()[0], 2)
             if name not in timings or dt < timings[name]:
@@ -180,6 +130,68 @@ def main() -> None:
     )
     spark.stop()
 
+
+def headline(
+    spark: SparkSession, sf_dir: str, cpus: int
+) -> dict[str, Callable[[Sink], None]]:
+    """The headline query table: name -> run(sink). Each run builds its
+    output frame(s) over inputs read from ``sf_dir`` and hands every frame
+    to ``sink``; ``force`` materializes them, bench_extra.py can capture the
+    plans instead."""
+    # testdata ships one parquet file per table -> Spark would scan with a
+    # single partition and serialize every narrow stage. A real 100 TB corpus
+    # arrives in thousands of splits; emulate that split-parallel input here.
+    docs = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .select("doc_id", "text")
+        .repartition(cpus)
+        .persist()
+    )
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(cpus)
+    events = spark.read.parquet(f"{sf_dir}/events.parquet").repartition(cpus)
+    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
+        F.col("p_partkey").alias("term_id"), F.col("p_name").alias("name")
+    )
+    corpus = load_corpus(spark, sf_dir).repartition(cpus).persist()
+
+    q_docs = docs.select(F.col("doc_id").alias("qid"), F.col("text").alias("qtext"))
+    ann_q = emb.filter(F.col("vec_id") % 10 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    ann_c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
+
+    def _kg_pipeline(sink: Sink) -> None:
+        # persist the extraction once: edge AND node tables consume the same
+        # triple stream, and without the cache each sink re-runs the full
+        # scan+regex extraction (the single most expensive stage) — the same
+        # persist a production job uses (cli.py graph job)
+        t = triples_frame(corpus).persist()
+        try:
+            sink(edge_table(t))
+            sink(node_table(t))
+        finally:
+            t.unpersist()
+
+    return {
+        "kg_pipeline": _kg_pipeline,
+        "kg_sel_udf_pipeline": lambda sink: sink(sel_roundtrip_triples(corpus)),
+        "link_bm25": lambda sink: sink(bm25_topn(q_docs, part, topn=5)),
+        "ann_dense_topk": lambda sink: sink(dense_topk_udf(ann_q, ann_c, k=10)),
+        "dedup_minhash_lsh": lambda sink: sink(minhash_lsh_pairs(docs, tau=0.5)),
+        "dedup_simhash_pairs": lambda sink: sink(simhash_pairs(docs, max_hamming=3)),
+        "dedup_substring": lambda sink: sink(substring_spans(docs)),
+        "ph_pmi": lambda sink: sink(pmi(docs, 3)),
+        "text_fingerprints": lambda sink: sink(fingerprints(docs)),
+        "text_quality": lambda sink: sink(quality_score(docs)),
+        "ann_ivf_pq": lambda sink: sink(ivf_pq_topk(ann_q, ann_c, k=5, dim=64)),
+        "ann_pq_codes": lambda sink: sink(pq_codes(emb, dim=64)),
+        "ev_asof_join": lambda sink: sink(asof_join(events)),
+        "profile_quantiles": lambda sink: sink(
+            profile_quantiles(lineitem, num_cols=PROFILE_NUM)
+        ),
+        "text_top_terms": lambda sink: sink(top_terms(docs, k=20)),
+    }
 
 if __name__ == "__main__":
     main()

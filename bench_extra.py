@@ -1,14 +1,16 @@
-"""Extra benchmark harness for optimization work (guide §1.4): per-query
-noop-sink isolation, optional subsets, optional .explain("formatted") capture.
+"""Extra benchmark harness for optimization work: per-query noop-sink
+isolation, optional subsets, optional .explain("formatted") capture.
 
-This file is NOT the driver's frozen bench.py — it mirrors bench.py's query
-construction exactly so its numbers are comparable, but adds:
+Runs bench.py's headline query table (``bench.headline``), so its numbers
+are comparable with bench.py's, and adds:
   --queries q1,q2   restrict to a subset
   --repeats N       best-of-N per query (default 1)
-  --explain DIR     write plans/<query>.txt explain("formatted") output
-  --first-run       also report the first (cold) run separately
+  --explain DIR     write DIR/<query>.txt explain("formatted") output
+The first (cold) run of every query is always reported as "first_run".
 
-Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py [...]
+Usage: python bench_extra.py [--queries ...] [--repeats N] [--explain DIR]
+(inputs and parallelism come from SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS,
+as for bench.py)
 """
 
 from __future__ import annotations
@@ -21,36 +23,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from deepkg_spark.operators.curation import profile_quantiles  # noqa: E402
-from deepkg_spark.operators.dedup import (  # noqa: E402
-    minhash_lsh_pairs,
-    simhash_pairs,
-    substring_spans,
-)
-from deepkg_spark.operators.events import asof_join  # noqa: E402
-from deepkg_spark.operators.graph import edge_table, node_table  # noqa: E402
-from deepkg_spark.operators.linking import bm25_topn, dense_topk_udf  # noqa: E402
-from deepkg_spark.operators.phrases import pmi  # noqa: E402
-from deepkg_spark.operators.relations import triples_frame  # noqa: E402
-from deepkg_spark.operators.sel import sel_roundtrip_triples  # noqa: E402
-from deepkg_spark.operators.similarity import ivf_pq_topk, pq_codes  # noqa: E402
-from deepkg_spark.operators.textstats import (  # noqa: E402
-    fingerprints,
-    quality_score,
-    top_terms,
-)
+from bench import force, headline  # noqa: E402
 from deepkg_spark.session import get_spark  # noqa: E402
-from deepkg_spark.sources.corpus import load_corpus  # noqa: E402
-
-PROFILE_NUM = ("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-               "l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-
-def _force(df) -> int:
-    df.write.format("noop").mode("overwrite").save()
-    return 0
 
 
 def main() -> None:
@@ -66,53 +40,7 @@ def main() -> None:
     spark = get_spark(app_name="deepkg-bench-extra", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
 
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(cpus)
-        .persist()
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(cpus)
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").repartition(cpus)
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet").select(
-        F.col("p_partkey").alias("term_id"), F.col("p_name").alias("name")
-    )
-    corpus = load_corpus(spark, sf_dir).repartition(cpus).persist()
-
-    q_docs = docs.select(F.col("doc_id").alias("qid"), F.col("text").alias("qtext"))
-    ann_q = emb.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    ann_c = emb.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
-
-    def _kg_pipeline() -> None:
-        t = triples_frame(corpus).persist()
-        try:
-            _force(edge_table(t))
-            _force(node_table(t))
-        finally:
-            t.unpersist()
-
-    frames = {
-        "kg_sel_udf_pipeline": lambda: sel_roundtrip_triples(corpus),
-        "link_bm25": lambda: bm25_topn(q_docs, part, topn=5),
-        "ann_dense_topk": lambda: dense_topk_udf(ann_q, ann_c, k=10),
-        "dedup_minhash_lsh": lambda: minhash_lsh_pairs(docs, tau=0.5),
-        "dedup_simhash_pairs": lambda: simhash_pairs(docs, max_hamming=3),
-        "dedup_substring": lambda: substring_spans(docs),
-        "ph_pmi": lambda: pmi(docs, 3),
-        "text_fingerprints": lambda: fingerprints(docs),
-        "text_quality": lambda: quality_score(docs),
-        "ann_ivf_pq": lambda: ivf_pq_topk(ann_q, ann_c, k=5, dim=64),
-        "ann_pq_codes": lambda: pq_codes(emb, dim=64),
-        "ev_asof_join": lambda: asof_join(events),
-        "profile_quantiles": lambda: profile_quantiles(lineitem, num_cols=PROFILE_NUM),
-        "text_top_terms": lambda: top_terms(docs, k=20),
-    }
-    queries = {"kg_pipeline": _kg_pipeline}
-    queries.update({n: (lambda fn=fn: _force(fn())) for n, fn in frames.items()})
-
+    queries = headline(spark, sf_dir, cpus)
     subset = [q for q in args.queries.split(",") if q]
     if subset:
         queries = {n: queries[n] for n in subset}
@@ -120,14 +48,13 @@ def main() -> None:
     if args.explain:
         os.makedirs(args.explain, exist_ok=True)
         jvm = spark.sparkContext._jvm
-        for name in queries:
-            if name in frames:
-                df = frames[name]()
-                txt = jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"
-                )
-                with open(os.path.join(args.explain, f"{name}.txt"), "w") as fh:
-                    fh.write(txt)
+        for name, fn in queries.items():
+            plans: list[str] = []
+            fn(lambda df: plans.append(jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )))
+            with open(os.path.join(args.explain, f"{name}.txt"), "w") as fh:
+                fh.write("\n".join(plans))
 
     timings: dict[str, float] = {}
     firsts: dict[str, float] = {}
@@ -135,7 +62,7 @@ def main() -> None:
         for name, fn in queries.items():
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             t0 = time.monotonic()
-            fn()
+            fn(force)
             dt = round(time.monotonic() - t0, 3)
             if r == 0:
                 firsts[name] = dt

@@ -26,5 +26,3 @@ read-only at /root/reference) as idiomatic Spark DataFrame plans:
 Everything is DataFrame/SQL-first; Python appears only inside Arrow-batched
 pandas UDFs (never per-row Python UDFs).
 """
-
-__version__ = "0.1.0"

@@ -50,10 +50,6 @@ def spark_h60(col: str) -> str:
     return f"CAST(conv(substring(md5({col}), 1, 15), 16, 10) AS BIGINT)"
 
 
-def spark_perm(h_expr: str, a: int, b: int) -> str:
-    return f"(({a}L * {h_expr} + {b}L) % {MERSENNE31}L)"
-
-
 # ---- DuckDB SQL snippets (identical numeric results) ----
 
 def duck_h32(col: str) -> str:
@@ -67,7 +63,3 @@ def duck_h31(col: str) -> str:
 def duck_h60(col: str) -> str:
     """DuckDB twin of spark_h60 (identical 60-bit value)."""
     return f"(('0x' || substr(md5({col}), 1, 15))::BIGINT)"
-
-
-def duck_perm(h_expr: str, a: int, b: int) -> str:
-    return f"(({a} * {h_expr} + {b}) % {MERSENNE31})"

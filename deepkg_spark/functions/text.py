@@ -40,17 +40,6 @@ def duck_tokens(col: str) -> str:
     return f"list_filter(string_split({col}, ' '), x -> x <> '')"
 
 
-IDENT_RE = "[A-Za-z_][A-Za-z0-9_]*"
-
-
-def spark_ident_tokens(col: str) -> str:
-    return f"regexp_extract_all({col}, '{IDENT_RE}', 0)"
-
-
-def duck_ident_tokens(col: str) -> str:
-    return f"regexp_extract_all({col}, '{IDENT_RE}', 0)"
-
-
 # ---------------- n-grams (word shingles) ----------------
 
 def spark_ngrams(tokens_expr: str, n: int, sep: str = " ") -> str:
@@ -70,16 +59,6 @@ def duck_ngrams(tokens_expr: str, n: int, sep: str = " ") -> str:
         f"i -> array_to_string(list_slice({tokens_expr}, i + 1, i + {n}), '{sep}')) "
         f"ELSE [] END"
     )
-
-
-# ---------------- portable normalization (SQL path) ----------------
-
-def spark_norm(col: str) -> str:
-    return f"lower(trim({col}))"
-
-
-def duck_norm(col: str) -> str:
-    return f"lower(trim({col}))"
 
 
 # ---------------- full-fidelity normalization (pandas UDF path) ----------------

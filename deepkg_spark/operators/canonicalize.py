@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from deepkg_spark.functions.hashing import spark_h32
-
 NORM = "lower(trim(surface))"
 
 

@@ -35,7 +35,6 @@ utils/tools.py:17-22 pins seeds).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

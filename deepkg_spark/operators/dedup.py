@@ -14,8 +14,8 @@ Scale notes per strategy:
               equi-join on (band_id, band_key); verification joins shingle
               sets only for candidate pairs. This is the 100 TB path: cost ~
               O(docs * shingles) + O(candidate pairs), never O(docs^2).
-- simhash:    32-bit signature via 32 conditional sums in one groupBy; pairs
-              via byte-band equi-join + bit_count(xor) hamming verify.
+- simhash:    60-bit signature via 60 conditional sums in one groupBy; pairs
+              via a 4 x 15-bit band equi-join + bit_count(xor) hamming verify.
 - jaccard:    exact n-gram Jaccard via shingle self-join — the correctness
               baseline; O(sum df^2) on hot shingles, so the scale path is
               minhash above (documented trade-off).
@@ -35,11 +35,9 @@ from pyspark.sql import functions as F
 from deepkg_spark.functions.hashing import (
     MERSENNE31,
     duck_h31,
-    duck_h32,
     duck_h60,
     minhash_coeffs,
     spark_h31,
-    spark_h32,
     spark_h60,
 )
 from deepkg_spark.functions.text import duck_ngrams, duck_tokens, spark_ngrams, spark_tokens
@@ -275,12 +273,12 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     band LSH (pigeonhole: a pair within distance 3 of 60 bits agrees on
     >= 1 of the 4 bands) + bit_count(xor) verification.
 
-    Scale audit (the round-4 weakness this replaces): byte bands over a
-    32-bit signature give only 256 keys/band, so bucket population grows as
-    N/256 and the band self-join emits O(N^2/256) candidates. 15-bit bands
-    give 32,768 keys/band — expected bucket size N/32768 and ~128x fewer
-    candidate pairs at the same N; candidate work stays O(N^2/32768) per
-    band, the Manku et al. banded-table scheme (4 tables, 15-bit prefixes).
+    Scale audit: byte bands over a 32-bit signature give only 256
+    keys/band, so bucket population grows as N/256 and the band self-join
+    emits O(N^2/256) candidates. 15-bit bands give 32,768 keys/band —
+    expected bucket size N/32768 and ~128x fewer candidate pairs at the same
+    N; candidate work stays O(N^2/32768) per band, the Manku et al.
+    banded-table scheme (4 tables, 15-bit prefixes).
     """
     assert max_hamming < SIMHASH_BANDS, (
         f"{SIMHASH_BANDS} bands only guarantee recall for hamming <= "

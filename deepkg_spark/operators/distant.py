@@ -29,9 +29,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from deepkg_spark.functions.text import spark_tokens
 
 
 class TokenTrie:

@@ -123,9 +123,17 @@ def asof_join(
     linear in |left| + |right|. At 100 TB the user_id key space is huge and
     uniform, so the single repartition is the floor for any per-user
     computation.
+
+    ``left_type`` and ``right_type`` must differ: each event gets exactly
+    one tag, so equal types would leave no left rows and an empty result.
     """
     from pyspark.sql import Window
 
+    if left_type == right_type:
+        raise ValueError(
+            f"asof_join: left_type and right_type must differ, both are "
+            f"{left_type!r}"
+        )
     # tag 0 = right (visible to same-ts lefts), 1 = left. ONE scan with a
     # tag expression — the former union of two filtered branches read the
     # input twice (the pushed-down filters make the subtrees differ, so

@@ -125,6 +125,12 @@ def bm25_topn(
       - query tokens JOIN postings on term: the only wide op; skew on hot
         terms is handled by AQE skew-join (enabled in session.py).
       - groupBy(qid, term_id) partial+final sum, then per-qid window top-N.
+
+    Index reuse: the postings/doclen/classes frames stay persisted, and a
+    later call whose dictionary plan is ``sameSemantics`` with this one
+    reuses them instead of rebuilding. The key is the plan, not the data:
+    a caller who rewrites the dictionary files at the same path must call
+    ``release_bm25_caches()`` first, or it gets the stale index.
     """
     q_tok = queries.select(
         "qid", F.explode(F.expr(spark_mode_tokens("qtext", mode))).alias("term")

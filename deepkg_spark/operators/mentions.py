@@ -333,7 +333,8 @@ def head_spans_udf(corpus: DataFrame, head: str = "biaffine") -> DataFrame:
     at model/model.py:89-147, :148-180, :193-235). Deterministic pinned-seed weights,
     sparse decode, Arrow batches; one narrow stage (scan -> mapInPandas),
     no shuffle — the mention-UDF scale shape. Scores rounded to 6 so rows
-    are bit-stable across cluster sizes. Non-SQL core -> rows-only check.
+    are bit-stable across cluster sizes. head_factored.py holds the
+    oracle-checked twins of these heads.
     """
     threshold = HEAD_THRESHOLDS[head]
     make_scorer = _HEAD_FACTORIES[head]

@@ -319,8 +319,8 @@ def phrase_features(
 
 def phrase_features_duck_sql(docs_rel: str, max_n: int = 3, min_freq: int = 3) -> str:
     """Exact DuckDB twin of phrase_features: the distributed half of the
-    AutoPhrase quality loop (the driver-side classifier stays rows-only, but
-    every feature it consumes is oracle-checked here). Entropies for all n
+    AutoPhrase quality loop (phrase_quality_duck_sql checks the classifier
+    on top). Entropies for all n
     in 2..max_n union cleanly because n-grams of different sizes are
     distinct strings."""
     ent_union = " UNION ALL ".join(

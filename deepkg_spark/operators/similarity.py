@@ -513,7 +513,11 @@ def _pq_assign_frame(
             ids = batch.column(0)
             flat = batch.column(1).flatten()
             V = flat.to_numpy(zero_copy_only=False).astype(np.float64)
-            assert V.size == n * dim, (V.size, n, dim)
+            if V.size != n * dim:
+                raise ValueError(
+                    f"PQ assignment saw a NULL or wrong-length vector: "
+                    f"{V.size} values for {n} rows of dim {dim}"
+                )
             V = V.reshape(n, dim)
             arrays: list = [ids]
             names = [id_col]

@@ -123,12 +123,3 @@ FROM (
 )
 """.strip()
     )
-
-
-def register_tables(spark: SparkSession, sf_dir: str) -> None:
-    """Register all driver testdata tables plus the derived corpus as views."""
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    spark.sql(corpus_sql()).createOrReplaceTempView("corpus")

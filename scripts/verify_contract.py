@@ -2,7 +2,7 @@
 sf0.01 + cluster-size determinism probe (the /verify recipe, runnable).
 
 Usage: python scripts/verify_contract.py [--probe q1,q2,...] [--only q1,q2]
-Exit 0 = every oracle-bearing query matches; prints a per-query status line.
+Exit 0 = every query matches its oracle; prints a per-query status line.
 """
 
 from __future__ import annotations
@@ -53,18 +53,10 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
-        sql = oracles.get(name)
         try:
+            sql = oracles[name]
             sdf = q(spark, SF)
             s = [tuple(r) for r in sdf.collect()]
-            if sql is None:
-                if name in probe_set:
-                    probe_cache[name] = canon_rows(
-                        [c.lower() for c in sdf.columns], s
-                    )
-                print(f"{name}: rows-only, {len(s)} rows, {time.time()-t0:.1f}s")
-                assert len(s) > 0, f"{name}: rows-only query returned 0 rows"
-                continue
             rel = con.sql(sql)
             d = rel.fetchall()
             sc = canon_rows([c.lower() for c in sdf.columns], s)

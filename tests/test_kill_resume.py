@@ -3,8 +3,6 @@ partial state; a fresh process resumes and the final output equals an
 uninterrupted run (north_rule: resumable from checkpoint with per-partition
 lineage)."""
 
-import json
-import os
 import shutil
 import signal
 import subprocess

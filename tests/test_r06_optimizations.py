@@ -3,8 +3,6 @@ its pre-optimization reference formulation on adversarial inputs, so a
 future change that breaks bit-equality fails here before the driver's
 oracle run."""
 
-import math
-
 import numpy as np
 import pytest
 from pyspark.sql import Window
@@ -72,6 +70,18 @@ def test_pq_assign_arrow_equals_sql_folds(spark):
     )
     cell_got = {r[0]: r[1] for r in cand.select("cid", "cell").collect()}
     assert cell_got == cell_ref
+
+
+def test_pq_codes_null_vector_raises_clear_error(spark):
+    """A NULL vector leaves the Arrow batch short of n * dim values; the
+    kernel must fail with a message naming the cause, not a bare assert."""
+    from deepkg_spark.operators import similarity as S
+
+    dim = 64
+    rows = [(0, [0.5] * dim), (1, None), (2, [-0.25] * dim)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match="NULL or wrong-length vector"):
+        S.pq_codes(emb, dim=dim).collect()
 
 
 def test_ivf_pq_topk_matches_join_window_reference(spark):
@@ -289,3 +299,16 @@ def test_asof_join_single_scan_equals_union_formulation(spark):
     # but prior_value = 5.0 from click 1 (IGNORE NULLS skips 2 and 5)
     assert got[3][3] == 5 and got[3][4] == 5.0
     assert got[4][3] is None and got[4][4] is None and got[4][5] is None
+
+
+def test_asof_join_equal_types_raises(spark):
+    """Equal left/right types would tag every event as a right row and
+    silently return nothing; the operator refuses them instead."""
+    from deepkg_spark.operators.events import asof_join
+
+    events = spark.createDataFrame(
+        [(1, 7, "click", 1.0)],
+        "event_id long, user_id long, event_type string, value double",
+    ).withColumn("ts", F.lit(1000).cast("timestamp"))
+    with pytest.raises(ValueError, match="left_type and right_type"):
+        asof_join(events, left_type="click", right_type="click")

@@ -2,8 +2,6 @@
 
 from collections import Counter
 
-from pyspark.sql import functions as F
-
 from deepkg_spark.operators.distant import (
     TokenTrie,
     decode_tie_or_break,
@@ -11,7 +9,7 @@ from deepkg_spark.operators.distant import (
     segment_dp,
     tie_or_break_spans,
 )
-from deepkg_spark.operators.relations import TRIPLE_COLS, triples_frame
+from deepkg_spark.operators.relations import triples_frame
 from deepkg_spark.operators.sel import (
     CODE_SCHEMA,
     parse_sel,
