@@ -16,7 +16,9 @@ partitioned corpus. This module provides the cluster-scale version:
 - The manifest row carries lineage + counters:
     (job_id, split_id, row_count, checksum, status, attempt)
   where checksum is an order-independent content digest
-  (sum of md5-derived row hashes mod 2^61) — verifiable on resume.
+  (sum of md5-derived row hashes mod 2^61). It is recorded as lineage:
+  neither entry point re-verifies it on resume; tests compare resumed and
+  one-shot manifests by it.
 - Commit order: data first, manifest second. A crash between the two replays
   the split (idempotent); a manifest row therefore PROVES its split's data is
   complete.
@@ -64,11 +66,23 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def _manifest_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Manifest `rows` (possibly none) as a one-partition JVM frame of typed
+    literals (Range -> Generate inline). A Python list would go through
+    sc.parallelize and start a Python worker to unpickle rows the driver
+    already holds; this frame never leaves the JVM, and an append of it
+    writes exactly one part file."""
+    structs = [F.struct(*map(F.lit, row)) for row in rows]
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*structs).cast(f"array<struct<{MANIFEST_SCHEMA}>>"))
+    )
+
+
 def read_manifest(spark: SparkSession, manifest_path: str, job_id: str) -> DataFrame:
     if path_exists(spark, manifest_path):
         df = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
         return df.filter((F.col("job_id") == job_id) & (F.col("status") == "ok"))
-    return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return _manifest_frame(spark, [])
 
 
 def run_incremental(
@@ -117,8 +131,11 @@ def run_incremental(
     result = pipeline_fn(pending_df.drop(SPLIT_COL)).withColumn(
         SPLIT_COL, F.expr(split_expr(n_splits)).cast("int")
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    result.write.mode("overwrite").partitionBy(SPLIT_COL).parquet(data_path)
+    # writer option, not session conf: the caller's later partitioned
+    # overwrites keep their own mode
+    result.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        SPLIT_COL
+    ).parquet(data_path)
 
     out_cols = [c for c in result.columns if c != SPLIT_COL]
     stats = {
@@ -139,9 +156,7 @@ def run_incremental(
     for s in sorted(pend_splits):
         row_count, checksum = stats.get(s, (0, 0))
         manifest_rows.append((job_id, int(s), int(row_count), int(checksum), "ok", 1))
-    spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(manifest_path)
+    _manifest_frame(spark, manifest_rows).write.mode("append").parquet(manifest_path)
     rows = sum(r[2] for r in manifest_rows)
     return {"pending": len(pend_splits), "processed": len(pend_splits), "rows": rows}
 
@@ -169,6 +184,9 @@ def run_staged(
     checksums to be meaningful — every stage here is (hash-gated filters,
     hash sampling, min-id survivors).
 
+    Per-stage commit cost: one stage write, one read-back job for the row
+    count + checksum, and one JVM-only manifest append (no Python worker).
+
     Returns ({stage_name: row_count}, final stage DataFrame).
     """
     manifest_path = f"{out_dir}/_manifest"
@@ -193,10 +211,9 @@ def run_staged(
             F.count(F.lit(1)).alias("c"),
             (F.sum(F.expr(_row_digest(out.columns))) % _CHECK_MOD).alias("k"),
         ).collect()[0]
-        spark.createDataFrame(
-            [(job_id, i, int(agg["c"]), int(agg["k"] or 0), "ok", 1)],
-            MANIFEST_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(manifest_path)
+        _manifest_frame(
+            spark, [(job_id, i, int(agg["c"]), int(agg["k"] or 0), "ok", 1)]
+        ).write.mode("append").parquet(manifest_path)
         prev = out
         counts[name] = int(agg["c"])
     return counts, prev

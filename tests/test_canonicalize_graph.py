@@ -1,11 +1,17 @@
 """Canonicalization (salted groupBy) + graph materialize + checkpoint resume."""
 
+import os
 import shutil
 import tempfile
 
 from pyspark.sql import functions as F
 
-from deepkg_spark.checkpoint import run_incremental
+from deepkg_spark.checkpoint import (
+    MANIFEST_SCHEMA,
+    read_manifest,
+    run_incremental,
+    run_staged,
+)
 from deepkg_spark.operators.canonicalize import (
     canonical_entities,
     canonical_entities_duck_sql,
@@ -101,6 +107,89 @@ def test_checkpoint_resume_exact(spark, sf_dir):
     finally:
         shutil.rmtree(d1, ignore_errors=True)
         shutil.rmtree(d2, ignore_errors=True)
+
+
+def _manifest_write_plans(spark, manifest_path):
+    """Physical plans of every finished SQL execution that wrote to
+    `manifest_path`, read from the SQL status store."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+    plans = [e.physicalPlanDescription() for e in conv.asJava(store.executionsList())]
+    return [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p and manifest_path in p]
+
+
+def test_manifest_commit_stays_in_jvm(spark):
+    """Manifest rows are a JVM frame of literals, never a Python list: no
+    commit plan scans an ExistingRDD, each commit appends one part file, the
+    missing-manifest frame is typed, and a manifest that mixes files written
+    the old way (createDataFrame of a list) with new ones reads back."""
+    d = tempfile.mkdtemp()
+    try:
+        manifest = f"{d}/_manifest"
+        empty = read_manifest(spark, manifest, "j")
+        assert empty.count() == 0
+        want = spark.createDataFrame([], MANIFEST_SCHEMA).schema
+        assert [(f.name, f.dataType) for f in empty.schema] == [
+            (f.name, f.dataType) for f in want
+        ]
+
+        stages = [("s0", lambda _: spark.range(40, numPartitions=3))] + [
+            (f"s{k}", lambda prev, k=k: prev.filter(prev.id % (k + 1) != 0))
+            for k in range(1, 5)
+        ]
+        counts, _ = run_staged(spark, stages, d, "j")
+        assert list(counts.values()) == [40, 20, 13, 13, 10]
+        parts = [f for f in os.listdir(manifest) if f.startswith("part-")]
+        assert len(parts) == 5
+        plans = _manifest_write_plans(spark, os.path.abspath(manifest))
+        assert len(plans) == 5
+        assert not [p for p in plans if "ExistingRDD" in p]
+
+        # resume across the upgrade: stage 0 committed the old way
+        d2 = tempfile.mkdtemp(dir=d)
+        spark.range(40, numPartitions=3).write.parquet(f"{d2}/stage_00_s0")
+        spark.createDataFrame([("j", 0, 40, 0, "ok", 1)], MANIFEST_SCHEMA).coalesce(
+            1
+        ).write.parquet(f"{d2}/_manifest")
+        counts2, _ = run_staged(spark, stages[:2], d2, "j")
+        assert counts2 == {"s0": 40, "s1": 20}
+        resumed = read_manifest(spark, f"{d2}/_manifest", "j").collect()
+        got = {(r["split_id"], r["row_count"]) for r in resumed}
+        assert got == {(0, 40), (1, 20)}
+        raw = spark.read.parquet(f"{d2}/_manifest")
+        assert raw.columns == want.names
+        assert {(r["split_id"], r["row_count"]) for r in raw.collect()} == got
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_run_incremental_leaves_session_overwrite_mode(spark):
+    """run_incremental overwrites its splits dynamically through a writer
+    option: the session conf is unchanged afterwards, so a later
+    partitioned overwrite in the same session still replaces old
+    partitions."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    d = tempfile.mkdtemp()
+    try:
+        corpus = spark.createDataFrame(
+            [("r", f"f{i}.py") for i in range(8)], "repo string, path string"
+        )
+        r = run_incremental(spark, corpus, lambda df: df, f"{d}/inc", "j", n_splits=4)
+        assert r["rows"] == 8
+        assert spark.conf.get(key) == before
+
+        out = f"{d}/t"
+        spark.createDataFrame([(1, "a"), (2, "b")], "v int, p string").write.mode(
+            "overwrite"
+        ).partitionBy("p").parquet(out)
+        spark.createDataFrame([(3, "a")], "v int, p string").write.mode(
+            "overwrite"
+        ).partitionBy("p").parquet(out)
+        assert spark.read.parquet(out).collect() == [(3, "a")]
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_connected_components_chain_and_singletons(spark):
